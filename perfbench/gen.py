@@ -1,163 +1,36 @@
-"""Seeded inputs for the benchmark.
+"""The seeded inputs of the benchmark.
 
-Two generators live here:
-
-* `make_tables(out_dir, sf)` writes the TPC-H-style star schema plus the
-  `documents` and `embeddings` tables that graft's catalog entries read,
-  with the column names and types of the repository's fixture tables.
-  The tables come from a fixed data seed, so every run of every workload
-  reads the same data and the cache under the build directory stays
-  valid.
-* `make_stream(seed, ...)` builds what `--seed` controls: the interactive
-  request stream with its write batches.
-
-The JVM side receives only the files these functions write.
+`make_stream(seed, domain, ...)` builds what `--seed` controls on the
+interactive workload: the ids the reads start from, the order of the
+requests, and the write batches. `domain(data_dir)` reads the keys and
+value sets it draws from out of the input tables. The JVM side receives
+only the file `write_stream_tsv` writes.
 """
 import datetime as dt
-import os
 import random
 
-import numpy as np
-import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
-DATA_SEED = 42
-GEN_VERSION = 1
-
-SEGMENTS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
-STATUSES = ["F", "O", "P"]
-PRIORITIES = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
-PART_ADJ = ["red", "blue", "small", "large", "hot", "cold", "old", "new"]
-PART_NOUN = ["widget", "bolt", "ring", "plate", "gizmo", "rod", "anvil", "gear"]
-PART_TYPES = ["ECONOMY", "STANDARD", "LARGE", "SMALL", "MEDIUM", "PROMO"]
-REGIONS = ["AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST"]
-WORDS = ("a the row column table key value hash join scan filter sort agg "
-         "group order part customer line data query spark batch stream "
-         "window merge vector big small fast slow").split()
-LANGS = ["en", "de", "es", "fr", "zh"]
-LANG_P = [0.44, 0.14, 0.14, 0.14, 0.14]
-DAY0 = dt.datetime(1995, 1, 1)
-ORDER_DAYS = 2403  # 1995-01-01 .. 2001-08-01
 NEW_ORDER_BASE = 1 << 32  # keys of orders the interactive writes create
 
 
-def sizes(sf):
-    """Row counts per table at scale factor `sf` (sf 1 = 6M lineitems)."""
+def domain(data_dir):
+    """Keys and value sets of the input tables the stream draws from."""
+    def col(table, name):
+        return pq.read_table(f"{data_dir}/{table}.parquet", columns=[name]).column(0)
+
+    dates = col("orders", "o_orderdate")
     return {
-        "customer": max(20, int(150_000 * sf)),
-        "supplier": max(5, int(10_000 * sf)),
-        "part": max(20, int(200_000 * sf)),
-        "orders": max(100, int(1_500_000 * sf)),
-        "documents": max(200, int(50_000 * sf)),
-        "embeddings": max(200, int(20_000 * sf)),
+        "customers": sorted(col("customer", "c_custkey").to_pylist()),
+        "parts": sorted(col("part", "p_partkey").to_pylist()),
+        "orders": sorted(col("orders", "o_orderkey").to_pylist()),
+        "segments": sorted(pc.unique(col("customer", "c_mktsegment")).to_pylist()),
+        "statuses": sorted(pc.unique(col("orders", "o_orderstatus")).to_pylist()),
+        "priorities": sorted(pc.unique(col("orders", "o_orderpriority")).to_pylist()),
+        "first_day": pc.min(dates).as_py().date(),
+        "days": (pc.max(dates).as_py() - pc.min(dates).as_py()).days,
     }
-
-
-def _ts(days):
-    return pa.array([DAY0 + dt.timedelta(days=int(d)) for d in days],
-                    type=pa.timestamp("ms"))
-
-
-def _write(out_dir, name, cols):
-    pq.write_table(pa.table(cols), os.path.join(out_dir, f"{name}.parquet"))
-
-
-def make_tables(out_dir, sf):
-    """Write every table the benchmark's catalog entries read."""
-    os.makedirs(out_dir, exist_ok=True)
-    rng = np.random.default_rng(DATA_SEED)
-    n = sizes(sf)
-    i64, i32 = pa.int64(), pa.int32()
-
-    _write(out_dir, "region", {
-        "r_regionkey": pa.array(range(5), i32),
-        "r_name": pa.array(REGIONS)})
-    _write(out_dir, "nation", {
-        "n_nationkey": pa.array(range(25), i32),
-        "n_name": pa.array([f"NATION_{k}" for k in range(25)]),
-        "n_regionkey": pa.array([k % 5 for k in range(25)], i32)})
-
-    nc = n["customer"]
-    _write(out_dir, "customer", {
-        "c_custkey": pa.array(np.arange(nc), i64),
-        "c_name": pa.array([f"Customer#{k:09d}" for k in range(nc)]),
-        "c_nationkey": pa.array(rng.integers(0, 25, nc), i32),
-        "c_acctbal": pa.array(np.round(rng.uniform(-999.99, 9999.99, nc), 2)),
-        "c_mktsegment": pa.array(rng.choice(SEGMENTS, nc))})
-
-    ns = n["supplier"]
-    _write(out_dir, "supplier", {
-        "s_suppkey": pa.array(np.arange(ns), i64),
-        "s_name": pa.array([f"Supplier#{k:09d}" for k in range(ns)]),
-        "s_nationkey": pa.array(rng.integers(0, 25, ns), i32),
-        "s_acctbal": pa.array(np.round(rng.uniform(-999.99, 9999.99, ns), 2))})
-
-    npart = n["part"]
-    price = np.round(900.0 + (np.arange(npart) % 1000) / 10.0, 2)
-    _write(out_dir, "part", {
-        "p_partkey": pa.array(np.arange(npart), i64),
-        "p_name": pa.array([f"{a} {b}" for a, b in zip(
-            rng.choice(PART_ADJ, npart), rng.choice(PART_NOUN, npart))]),
-        "p_brand": pa.array([f"Brand#{k}" for k in rng.integers(1, 26, npart)]),
-        "p_type": pa.array(rng.choice(PART_TYPES, npart)),
-        "p_size": pa.array(rng.integers(1, 51, npart), i32),
-        "p_retailprice": pa.array(price)})
-
-    no = n["orders"]
-    odays = rng.integers(0, ORDER_DAYS + 1, no)
-    _write(out_dir, "orders", {
-        "o_orderkey": pa.array(np.arange(no), i64),
-        "o_custkey": pa.array(rng.integers(0, nc, no), i64),
-        "o_orderstatus": pa.array(rng.choice(STATUSES, no)),
-        "o_totalprice": pa.array(np.round(rng.uniform(1000.0, 500000.0, no), 2)),
-        "o_orderdate": _ts(odays),
-        "o_orderpriority": pa.array(rng.choice(PRIORITIES, no))})
-
-    lines = np.clip(rng.poisson(4.0, no), 1, 13)
-    okey = np.repeat(np.arange(no), lines)
-    lnum = np.concatenate([np.arange(1, k + 1) for k in lines])
-    nl = len(okey)
-    pkey = rng.integers(0, npart, nl)
-    qty = rng.integers(1, 51, nl).astype(float)
-    _write(out_dir, "lineitem", {
-        "l_orderkey": pa.array(okey, i64),
-        "l_partkey": pa.array(pkey, i64),
-        "l_suppkey": pa.array(rng.integers(0, ns, nl), i64),
-        "l_linenumber": pa.array(lnum, i32),
-        "l_quantity": pa.array(qty),
-        "l_extendedprice": pa.array(np.round(qty * price[pkey], 2)),
-        "l_discount": pa.array(rng.integers(0, 11, nl) / 100.0),
-        "l_tax": pa.array(rng.integers(0, 9, nl) / 100.0),
-        "l_returnflag": pa.array(rng.choice(["A", "N", "R"], nl)),
-        "l_linestatus": pa.array(rng.choice(["F", "O"], nl)),
-        "l_shipdate": _ts(np.repeat(odays, lines) + rng.integers(1, 122, nl))})
-
-    nd = n["documents"]
-    texts = []
-    for k in range(nd):
-        if k > 10 and rng.random() < 0.05:
-            # near duplicate of an earlier document: the dedup operators
-            # must find these pairs
-            texts.append(texts[int(rng.integers(0, k))] + " dup")
-        else:
-            texts.append(" ".join(rng.choice(WORDS, int(rng.integers(10, 100)))))
-    _write(out_dir, "documents", {
-        "doc_id": pa.array(np.arange(nd), i64),
-        "text": pa.array(texts),
-        "lang": pa.array(rng.choice(LANGS, nd, p=LANG_P)),
-        "source": pa.array([f"src{k % 20}" for k in range(nd)]),
-        "n_chars": pa.array([len(t) for t in texts], i64)})
-
-    ne = n["embeddings"]
-    centers = rng.normal(0.0, 1.0, (10, 64))
-    labels = rng.integers(0, 10, ne)
-    vecs = centers[labels] + rng.normal(0.0, 1.5, (ne, 64))
-    vecs = (vecs / np.linalg.norm(vecs, axis=1, keepdims=True)).astype(np.float32)
-    _write(out_dir, "embeddings", {
-        "vec_id": pa.array(np.arange(ne), i64),
-        "embedding": pa.array(list(vecs), pa.list_(pa.float32())),
-        "label": pa.array(labels, i32)})
-    return n
 
 
 # ------------------------------------------------------------ the stream
@@ -182,11 +55,12 @@ def vid(label, key):
     return (LABEL_CODE[label] << 40) | key
 
 
-def make_stream(seed, n_cust, n_part, n_orders, n_blocks, batch_orders=4):
-    """The interactive request stream: `n_blocks` blocks, each one read of
-    every kind in a seeded order plus one write at a seeded place. Every
-    block runs the same mix; the seed picks the order, the ids and the
-    write batches."""
+def make_stream(seed, dom, n_blocks, batch_orders=4):
+    """The interactive request stream over the keys and values of `dom`
+    (see `domain`): `n_blocks` blocks, each one read of every kind in a
+    seeded order plus one write at a seeded place. Every block runs the
+    same mix; the seed picks the order, the ids and the write batches."""
+    assert dom["orders"][-1] < NEW_ORDER_BASE
     rng = random.Random(seed)
     requests, batches = [], []
     next_key = NEW_ORDER_BASE
@@ -201,11 +75,11 @@ def make_stream(seed, n_cust, n_part, n_orders, n_blocks, batch_orders=4):
                 if made and rng.random() < 0.5:
                     key = NEW_ORDER_BASE + rng.randrange(made)
                 else:
-                    key = rng.randrange(n_orders)
+                    key = rng.choice(dom["orders"])
                 block.append({"kind": kind, "key": key})
                 continue
-            params = {"c": rng.randrange(n_cust), "p": rng.randrange(n_part),
-                      "seg": rng.choice(SEGMENTS)}
+            params = {"c": rng.choice(dom["customers"]), "p": rng.choice(dom["parts"]),
+                      "seg": rng.choice(dom["segments"])}
             text = READ_TEMPLATES[kind].format(
                 c=vid("customer", params["c"]), p=vid("part", params["p"]),
                 seg=params["seg"])
@@ -214,16 +88,16 @@ def make_stream(seed, n_cust, n_part, n_orders, n_blocks, batch_orders=4):
         for _ in range(batch_orders):
             okey = next_key
             next_key += 1
-            day = rng.randrange(ORDER_DAYS + 1)
+            day = dom["first_day"] + dt.timedelta(days=rng.randrange(dom["days"] + 1))
             orders.append({
-                "o_orderkey": okey, "o_custkey": rng.randrange(n_cust),
-                "o_orderstatus": rng.choice(STATUSES),
+                "o_orderkey": okey, "o_custkey": rng.choice(dom["customers"]),
+                "o_orderstatus": rng.choice(dom["statuses"]),
                 "o_totalprice": round(rng.uniform(1000.0, 500000.0), 2),
-                "o_orderdate": (DAY0 + dt.timedelta(days=day)).strftime("%Y-%m-%d"),
-                "o_orderpriority": rng.choice(PRIORITIES)})
+                "o_orderdate": day.strftime("%Y-%m-%d"),
+                "o_orderpriority": rng.choice(dom["priorities"])})
             for ln in range(1, rng.randint(1, 7) + 1):
                 lines.append({
-                    "l_orderkey": okey, "l_partkey": rng.randrange(n_part),
+                    "l_orderkey": okey, "l_partkey": rng.choice(dom["parts"]),
                     "l_linenumber": ln, "l_quantity": float(rng.randint(1, 50)),
                     "l_extendedprice": round(rng.uniform(900.0, 50000.0), 2),
                     "l_discount": rng.randint(0, 10) / 100.0})
@@ -233,7 +107,10 @@ def make_stream(seed, n_cust, n_part, n_orders, n_blocks, batch_orders=4):
         for i, r in enumerate(block):
             r["block"], r["block_start"] = b, i == 0
         requests.extend(block)
-    return {"seed": seed, "requests": requests, "batches": batches}
+    # one read of each kind before the timed loop; it is not checked
+    warm = {"c": dom["customers"][0], "p": dom["parts"][0], "seg": dom["segments"][0],
+            "key": dom["orders"][0]}
+    return {"seed": seed, "warm": warm, "requests": requests, "batches": batches}
 
 
 def write_stream_tsv(stream, path):
@@ -242,8 +119,9 @@ def write_stream_tsv(stream, path):
     | P <orderkey> | W <batch> | O <batch> <order cols> | L <batch> <line cols>."""
     with open(path, "w") as f:
         for kind in READ_KINDS:
-            arg = "0" if kind == POINT_READ else READ_TEMPLATES[kind].format(
-                c=vid("customer", 0), p=vid("part", 0), seg=SEGMENTS[0])
+            w = stream["warm"]
+            arg = str(w["key"]) if kind == POINT_READ else READ_TEMPLATES[kind].format(
+                c=vid("customer", w["c"]), p=vid("part", w["p"]), seg=w["seg"])
             f.write(f"X\t{kind}\t{arg}\n")
         for b, batch in enumerate(stream["batches"]):
             for o in batch["orders"]:

@@ -14,11 +14,11 @@ from collections import defaultdict
 MB = 1024.0 * 1024.0
 
 # the batch workload's catalog entries, in run order: the iterative loop
-# family, then the LLM-data operators. The order is fixed because the
-# first call of a run pays the JVM's remaining warm-up, and a seeded
-# order moved that cost between entries from run to run.
+# family, then the LLM-data operators. The order is fixed: in one pass
+# the first call costs 2.5 to 4.5 s more than later ones, depending on
+# the entry, and a seeded order moved wall_s by a tenth between seeds.
 LOOPS = ["a_pagerank_exact"]
-OPERATORS = ["d5_minhash_pairs", "e3_ivf_topk", "p1_corpus_curation"]
+OPERATORS = ["d5_minhash_pairs", "d27_simhash_pairs", "e3_ivf_topk", "p1_corpus_curation"]
 BATCH_JOBS = LOOPS + OPERATORS
 
 # (name, unit) of every per-layer metric, in BENCHMARK.json order
@@ -220,9 +220,9 @@ def per_layer(res, workload):
             m[f"op.{e}.shuffle_mb"] = median(x["shuffle.write_mb"] for x in mine(e))
         m["algo.checkpoint_jobs"] = median(x["checkpoint_jobs"] for x in sums)
         m["graph.build_ms"] = median(span_ms("graph.build"))
-        timed = [o for o in ops if o["kind"] != "warm"]
-        on = sum(o["ms"] for o in timed if o["traced"])
-        off = sum(o["ms"] for o in timed if not o["traced"])
+        paired = [o for o in ops if o["kind"] != "warm"]
+        on = sum(o["ms"] for o in paired if o["traced"])
+        off = sum(o["ms"] for o in paired if not o["traced"])
     m["trace.overhead_ms"] = on - off
     m["trace.overhead_frac"] = (on - off) / off if off else 0.0
     return m

@@ -2,98 +2,43 @@ package perfbench
 
 import java.nio.file.{Files, Path}
 
-import org.apache.spark.sql.Row
+import org.json4s.{DefaultFormats, Formats}
+import org.json4s.jackson.Serialization
 
-/** A minimal JSON writer: enough for the result file and the trace. */
-final class Json {
-  private val sb = new StringBuilder
-  private var first = true
-
-  private def sep(): Unit = { if (!first) sb += ','; first = false }
-
-  def key(k: String): Unit = { sep(); sb ++= Json.str(k); sb += ':'; first = true }
-
-  def value(v: Any): Unit = { sep(); sb ++= Json.render(v) }
-
-  def field(k: String, v: Any): Unit = { key(k); value(v) }
-
-  def obj(body: => Unit): Unit = { sep(); sb += '{'; first = true; body; sb += '}'; first = false }
-
-  def arr[T](xs: Iterable[T])(each: T => Unit): Unit = {
-    sep(); sb += '['; first = true; xs.foreach(each); sb += ']'; first = false
-  }
-
-  override def toString: String = sb.toString
-}
-
+/** JSON for the result file, the trace and the oracle SQL, by json4s. */
 object Json {
-  def str(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
+  private implicit val formats: Formats = DefaultFormats
 
-  def render(v: Any): String = v match {
-    case null | None => "null"
-    case Some(x) => render(x)
-    case s: String => str(s)
-    case d: Double => if (d.isNaN || d.isInfinite) "null" else d.toString
-    case f: Float => render(f.toDouble)
-    case b: Boolean => b.toString
-    case n: java.lang.Number => n.toString
-    case t: java.sql.Timestamp => str(t.toString)
-    case d: java.sql.Date => str(d.toString)
-    case xs: Iterable[_] => xs.map(render).mkString("[", ",", "]")
-    case other => str(other.toString)
-  }
+  def write(v: AnyRef): String = Serialization.write(v)
 
-  /** result rows as a JSON array of arrays */
-  def rows(rs: Seq[Row]): String = rs.map(r => render(r.toSeq)).mkString("[", ",", "]")
-
-  /** `name -> oracle SQL` in the form tools/check.py reads */
-  def writeOracle(path: Path, entries: Seq[(String, String)]): Unit = {
+  def writeFile(path: Path, v: AnyRef): Unit = {
     Files.createDirectories(path.getParent)
-    Files.writeString(path,
-      entries.map { case (k, v) => s"${str(k)}: ${str(v)}" }.mkString("{", ",", "}"))
+    Files.writeString(path, write(v))
   }
 }
 
-/** Writes the in-memory trace into the result file at the end of a run. */
+/** The in-memory trace, as fields of the result file, at the end of a run. */
 object TraceDump {
-  def write(json: Json, t: Tracer, units: Seq[Main.UnitRec]): Unit = {
+  def fields(t: Tracer, units: Seq[Main.UnitRec]): Map[String, Any] = {
     t.flush()
     val off = t.offsetMs
-    json.key("spans")
-    json.arr(t.spans) { s =>
-      json.value(Seq(s.id, s.parent, s.trace, s.name, s.start / 1e6 + off, s.end / 1e6 + off))
+    val spans = t.spans.toSeq.map { s =>
+      Seq(s.id, s.parent, s.trace, s.name, s.start / 1e6 + off, s.end / 1e6 + off)
     }
-    t.jobs.synchronized {
-      json.key("jobs")
-      json.arr(t.jobs.jobs) { j =>
-        json.value(Seq(j.id, j.group, j.desc, j.callSite, j.start, j.end, j.stages))
-      }
-      json.key("tasks")
-      json.arr(t.jobs.tasks) { k =>
-        json.value(Seq(k.stage, k.launch, k.finish, k.runMs, k.cpuNs, k.gcMs,
-          k.shuffleWrite, k.shuffleRead, k.spill))
-      }
-      json.key("stage_submit")
-      json.arr(t.jobs.stageSubmit.toSeq.sortBy(_._1)) { case (id, at) =>
-        json.value(Seq(id, at))
-      }
+    val events = t.jobs.synchronized {
+      Map(
+        "jobs" -> t.jobs.jobs.toSeq.map(j =>
+          Seq(j.id, j.group, j.desc, j.callSite, j.start, j.end, j.stages)),
+        "tasks" -> t.jobs.tasks.toSeq.map(k => Seq(k.stage, k.launch, k.finish, k.runMs,
+          k.cpuNs, k.gcMs, k.shuffleWrite, k.shuffleRead, k.spill)),
+        "stage_submit" -> t.jobs.stageSubmit.toSeq.sortBy(_._1).map { case (id, at) =>
+          Seq(id, at)
+        })
     }
-    json.key("units")
-    json.arr(units) { u =>
-      json.obj {
-        json.field("id", u.id)
-        json.field("span", u.span)
-        json.field("plans", u.plans.map(p => Seq(p.analysisMs, p.optimizeMs, p.physicalMs,
-          p.scanRows, p.scanBytes, p.outputRows)))
-      }
-    }
+    events ++ Map(
+      "spans" -> spans,
+      "units" -> units.map(u => Map("id" -> u.id, "span" -> u.span,
+        "plans" -> u.plans.map(p => Seq(p.analysisMs, p.optimizeMs, p.physicalMs,
+          p.scanRows, p.scanBytes, p.outputRows)))))
   }
 }

@@ -23,10 +23,9 @@ import graft.sources.{GraphStorage, TxTable}
   *   data      directory of the input parquet tables
   *   out       directory for results, outputs and the trace
   *   work      scratch directory (warehouse, checkpoints, spill)
-  *   seconds   how long the timed loop runs
+  *   seconds   interactive: sets the number of request blocks
   *   trace     0 or 1
   *   cpus      local[cpus]
-  *   reps      set-up rounds
   *   jobs      batch: catalog entries in run order
   *   stream    interactive: the request stream file
   */
@@ -50,36 +49,23 @@ object Main {
     val seconds = args("seconds").toDouble
     val traced = args("trace") == "1"
     val cpus = args.getOrElse("cpus", "4").toInt
-    val reps = args.getOrElse("reps", "3").toInt
     Files.createDirectories(out)
 
     val bench = workload match {
-      case "batch" => new Batch(args("jobs").split(',').toSeq, data, out)
+      case "batch" => new Batch(args("jobs").split(',').toSeq, data, work, out)
       case "interactive" =>
         new Interactive(Stream.read(args("stream")), data, work, out, buckets = cpus)
       case other => throw new IllegalArgumentException(s"unknown workload $other")
     }
 
-    // Set-up rounds: each builds a fresh session and warms it up. Round 1
-    // is timed from JVM start. The workload's own set-up runs once after
-    // them, as a user would store a graph once.
-    val setupS = mutable.ArrayBuffer[Double]()
-    var spark: SparkSession = null
-    for (r <- 1 to reps) {
-      if (spark != null) spark.stop()
-      val t = System.currentTimeMillis()
-      spark = Session.build(cpus, work)
-      val t1 = System.currentTimeMillis()
-      Session.warmUp(spark, data)
-      val end = System.currentTimeMillis()
-      println(s"set-up round $r: session ${t1 - t} ms, warm-up ${end - t1} ms")
-      setupS += (end - (if (r == 1) t0Ms else t)) / 1000.0
-    }
+    // set-up: from JVM start until the first timed operation
+    val spark = Session.build(cpus, work)
     val tracer = new Tracer(spark)
     val p0 = System.nanoTime()
     bench.prepare(spark, tracer)
     val prepareS = (System.nanoTime() - p0) / 1e9
-    println(f"workload set-up $prepareS%.2f s")
+    val setupS = (System.currentTimeMillis() - t0Ms) / 1000.0
+    println(f"set-up $setupS%.2f s, of which the workload's own $prepareS%.2f s")
 
     val loopStart = System.nanoTime()
     val ops = bench.loop(spark, tracer, seconds, traced)
@@ -88,25 +74,13 @@ object Main {
     val extra = bench.finish(spark)
     spark.stop()
 
-    val json = new Json
-    json.obj {
-      json.field("workload", workload)
-      json.field("setup_s", setupS.toSeq)
-      json.field("prepare_s", prepareS)
-      json.field("loop_s", loopS)
-      json.field("peak_rss_mb", Host.peakRssMb())
-      json.field("cores", cpus)
-      extra.foreach { case (k, v) => json.field(k, v) }
-      json.key("ops")
-      json.arr(ops) { o =>
-        json.obj {
-          json.field("kind", o.kind); json.field("name", o.name); json.field("ms", o.ms)
-          json.field("traced", o.traced); json.field("error", o.error)
-        }
-      }
-      if (traced) TraceDump.write(json, tracer, bench.units.toSeq)
-    }
-    Files.writeString(out.resolve("result.json"), json.toString)
+    val result = Map[String, Any](
+      "workload" -> workload, "setup_s" -> setupS, "prepare_s" -> prepareS,
+      "loop_s" -> loopS, "peak_rss_mb" -> Host.peakRssMb(), "cores" -> cpus,
+      "ops" -> ops.map(o => Map("kind" -> o.kind, "name" -> o.name, "ms" -> o.ms,
+        "traced" -> o.traced, "error" -> o.error))) ++ extra ++
+      (if (traced) TraceDump.fields(tracer, bench.units.toSeq) else Map.empty)
+    Files.writeString(out.resolve("result.json"), Json.write(result))
   }
 }
 
@@ -133,18 +107,6 @@ object Session {
     spark.sparkContext.setLogLevel("ERROR")
     spark.sparkContext.setCheckpointDir(s"$work/ckpt")
     spark
-  }
-
-  /** One shuffle join and aggregate over the inputs, so the first timed
-    * call does not pay alone for class loading and compiling the common
-    * operators.
-    */
-  def warmUp(spark: SparkSession, data: String): Unit = {
-    def t(name: String) = spark.read.parquet(s"$data/$name.parquet")
-    t("lineitem").join(t("orders"), col("l_orderkey") === col("o_orderkey"))
-      .groupBy("o_orderstatus")
-      .agg(sum("l_quantity"), countDistinct("l_partkey"), count(lit(1)))
-      .collect()
   }
 }
 
@@ -196,59 +158,64 @@ trait Workload {
     }
 }
 
-/** `batch`: passes over catalog entries. A read is one
-  * entry call until its result is collected; a write persists that
-  * result as parquet for the output check.
+/** `batch`: one pass over catalog entries in a fresh session. Each call
+  * is one action, as graft.Verify makes it: the entry's result written as
+  * one parquet file, which the output check then reads.
   */
-final class Batch(jobs: Seq[String], data: String, out: Path) extends Workload {
+final class Batch(jobs: Seq[String], data: String, work: String, out: Path)
+    extends Workload {
   private val oracle = mutable.LinkedHashMap[String, String]()
 
-  def prepare(spark: SparkSession, tracer: Tracer): Unit = ()
+  /** One shuffle join and aggregate over the inputs, written as parquet
+    * the way every timed call writes, so the first timed call does not pay
+    * alone for starting Spark's job, codegen and output machinery.
+    */
+  def prepare(spark: SparkSession, tracer: Tracer): Unit = {
+    def t(name: String) = spark.read.parquet(s"$data/$name.parquet")
+    t("lineitem").join(t("orders"), col("l_orderkey") === col("o_orderkey"))
+      .groupBy("o_orderstatus")
+      .agg(sum("l_quantity"), countDistinct("l_partkey"), count(lit(1)))
+      .coalesce(1).write.mode("overwrite").parquet(s"$work/warm")
+  }
 
   def loop(spark: SparkSession, tracer: Tracer, seconds: Double,
            traced: Boolean): Seq[Main.Op] = {
     val ops = mutable.ArrayBuffer[Main.Op]()
-    var call = 0
-    def run(job: String, on: Boolean): Seq[Main.Op] = {
+    def run(job: String, call: String, on: Boolean): Unit = {
       if (on) tracer.enable() else tracer.disable()
-      call += 1
-      guarded("read", job, on)(runJob(spark, tracer, job, s"${job}__c$call", on))
+      ops ++= guarded("job", job, on)(Seq(runJob(spark, tracer, job, call, on)))
     }
+    // exactly one pass, whatever `seconds` is. A traced run makes that
+    // pass untraced, then calls every job untraced and traced in
+    // alternating order: the pairs give the tracing overhead, free of
+    // first-call costs.
+    jobs.foreach(job => run(job, job, on = false))
     if (traced) {
-      // a warm-up pass, then every job untraced and traced in alternating
-      // order: the pairs give the tracing overhead, free of first-call costs
-      jobs.foreach(job => ops ++= run(job, on = false).map(_.copy(kind = "warm")))
+      ops.mapInPlace(_.copy(kind = "warm"))
       jobs.zipWithIndex.foreach { case (job, j) =>
         val first = j % 2 == 1
-        ops ++= run(job, first) ++ run(job, !first)
+        run(job, s"${job}__${if (first) "on" else "off"}", first)
+        run(job, s"${job}__${if (first) "off" else "on"}", !first)
       }
-    } else {
-      val start = System.nanoTime()
-      while (ops.isEmpty || (System.nanoTime() - start) / 1e9 < seconds)
-        jobs.foreach(job => ops ++= run(job, on = false))
     }
     tracer.disable()
-    Json.writeOracle(out.resolve("verify/oracle_sql.json"), oracle.toSeq)
+    Json.writeFile(out.resolve("verify/oracle_sql.json"), oracle.toMap)
     ops.toSeq
   }
 
-  private def runJob(spark: SparkSession, tracer: Tracer, job: String, name: String,
-                     on: Boolean): Seq[Main.Op] = {
-    val fn = SparkEntry.queries(job)
+  private def runJob(spark: SparkSession, tracer: Tracer, job: String, call: String,
+                     on: Boolean): Main.Op = {
     val t0 = System.nanoTime()
-    val (rows, schema) = unit(tracer, s"job:$job") {
+    unit(tracer, s"job:$job") {
       if (tracer.enabled && job.startsWith("a_"))
         tracer.span("graph.build") { PropertyGraph.fromTpch(spark, data) }
-      val df = tracer.span("entry.call") { fn(spark, data) }
-      (tracer.span("exec.collect") { df.collect() }, df.schema)
+      val df = tracer.span("entry.call") { SparkEntry.queries(job)(spark, data) }
+      tracer.span("exec.write") {
+        df.coalesce(1).write.mode("overwrite").parquet(out.resolve(s"verify/$call").toString)
+      }
     }
-    val readMs = ms(t0)
-    val t1 = System.nanoTime()
-    spark.createDataFrame(rows.toSeq.asJava, schema).coalesce(1)
-      .write.mode("overwrite").parquet(out.resolve(s"verify/$name").toString)
-    val writeMs = ms(t1)
-    SparkEntry.oracleSql.get(job).foreach(sql => oracle(name) = sql)
-    Seq(Main.Op("read", job, readMs, on), Main.Op("write", job, writeMs, on))
+    SparkEntry.oracleSql.get(job).foreach(sql => oracle(call) = sql)
+    Main.Op("job", job, ms(t0), on)
   }
 }
 
@@ -295,8 +262,8 @@ object Stream {
 }
 
 object Interactive {
-  /** `seconds` buys one block per this many seconds: four blocks at 15 s */
-  val BlockSeconds = 3.75
+  /** `seconds` buys one block per this many seconds: six blocks at 15 s */
+  val BlockSeconds = 2.5
 }
 
 /** `interactive`: a closed loop of Gremlin reads, TxTable point reads and
@@ -369,7 +336,7 @@ final class Interactive(stream: Stream, data: String, work: String, out: Path,
       }
     }
     val took = ms(t0)
-    results ++= s"${r.kind}\t$applied\t${Json.rows(rows.toSeq)}\n"
+    results ++= s"${r.kind}\t$applied\t${Json.write(rows.toSeq.map(_.toSeq))}\n"
     Main.Op("read", r.kind, took, tracer.enabled)
   }
 

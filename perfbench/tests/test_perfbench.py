@@ -27,14 +27,15 @@ import check  # noqa: E402
 import gen  # noqa: E402
 import run  # noqa: E402
 
-SF = 0.001
+SF = "0.001"
+DATA = run.DATA[SF]
 WORK = os.path.join(build.build_dir(), "selftest")
 
 
 def run_bench(workload, trace, keep=None):
     """One benchmark run at SF; returns (stdout lines, result object)."""
     argv = ["--workload", workload, "--seed", "3", "--seconds", "1", "--trace", str(trace),
-            "--sf", str(SF)]
+            "--sf", SF]
     if keep:
         argv += ["--keep", keep]
     buf = io.StringIO()
@@ -45,8 +46,10 @@ def run_bench(workload, trace, keep=None):
 
 
 class StreamTest(unittest.TestCase):
+    dom = gen.domain(DATA)
+
     def stream(self, seed):
-        return gen.make_stream(seed, n_cust=150, n_part=200, n_orders=1500, n_blocks=20)
+        return gen.make_stream(seed, self.dom, n_blocks=20)
 
     def test_same_seed_same_inputs(self):
         self.assertEqual(self.stream(5), self.stream(5))
@@ -67,8 +70,8 @@ class CheckerTest(unittest.TestCase):
     rejects an altered one."""
 
     def test_altered_read_is_a_mismatch(self):
-        data = run.ensure_data(SF)
-        stream = gen.make_stream(4, n_cust=150, n_part=200, n_orders=1500, n_blocks=6)
+        data = DATA
+        stream = gen.make_stream(4, gen.domain(data), n_blocks=6)
         con = check.connect(data, stream)
         os.makedirs(WORK, exist_ok=True)
         path = os.path.join(WORK, "reads.tsv")
@@ -118,10 +121,10 @@ class MetricsTest(unittest.TestCase):
         self.assert_metrics(res, "per_layer")
         # alter one value of one persisted output: tools/check.py must flag it
         verify = os.path.join(keep, "verify")
-        data = run.ensure_data(SF)
+        data = DATA
         cache = os.path.join(build.build_dir(), "oracle")
         self.assertEqual(check.check_batch(ROOT, data, verify, cache)[1], [])
-        out = sorted(glob.glob(os.path.join(verify, "a_pagerank_exact__*", "*.parquet")))[0]
+        out = sorted(glob.glob(os.path.join(verify, "a_pagerank_exact", "*.parquet")))[0]
         t = pq.read_table(out)
         ranks = t.column("pr").to_pylist()
         ranks[0] += 1
