@@ -107,22 +107,14 @@ def make_stream(seed, dom, n_blocks, batch_orders=4):
         for i, r in enumerate(block):
             r["block"], r["block_start"] = b, i == 0
         requests.extend(block)
-    # one read of each kind before the timed loop; it is not checked
-    warm = {"c": dom["customers"][0], "p": dom["parts"][0], "seg": dom["segments"][0],
-            "key": dom["orders"][0]}
-    return {"seed": seed, "warm": warm, "requests": requests, "batches": batches}
+    return {"seed": seed, "requests": requests, "batches": batches}
 
 
 def write_stream_tsv(stream, path):
     """Flatten the stream into the tab-separated form the JVM side reads:
-    X <kind> <arg> (warm-up read) | B <block> | R <kind> <gremlin>
+    B <block> | R <kind> <gremlin>
     | P <orderkey> | W <batch> | O <batch> <order cols> | L <batch> <line cols>."""
     with open(path, "w") as f:
-        for kind in READ_KINDS:
-            w = stream["warm"]
-            arg = str(w["key"]) if kind == POINT_READ else READ_TEMPLATES[kind].format(
-                c=vid("customer", w["c"]), p=vid("part", w["p"]), seg=w["seg"])
-            f.write(f"X\t{kind}\t{arg}\n")
         for b, batch in enumerate(stream["batches"]):
             for o in batch["orders"]:
                 f.write("\t".join(["O", str(b)] + [str(o[k]) for k in (

@@ -177,7 +177,9 @@ def per_layer(res, workload):
     def span_ms(name):
         return [tr.dur(k) for sid in stats for k in tr.child(sid, name)]
 
-    ops = res["ops"]
+    # warm-up calls (a traced batch run's untraced first pass, the
+    # interactive set-up block) take no part in the per-layer figures
+    ops = [o for o in res["ops"] if o["kind"] != "warm"]
     if workload == "interactive":
         reads = [sid for sid in stats if name_of[sid].startswith("read:")]
         m["parser.parse_ms"] = median(span_ms("parser.parse"))
@@ -220,9 +222,8 @@ def per_layer(res, workload):
             m[f"op.{e}.shuffle_mb"] = median(x["shuffle.write_mb"] for x in mine(e))
         m["algo.checkpoint_jobs"] = median(x["checkpoint_jobs"] for x in sums)
         m["graph.build_ms"] = median(span_ms("graph.build"))
-        paired = [o for o in ops if o["kind"] != "warm"]
-        on = sum(o["ms"] for o in paired if o["traced"])
-        off = sum(o["ms"] for o in paired if not o["traced"])
+        on = sum(o["ms"] for o in ops if o["traced"])
+        off = sum(o["ms"] for o in ops if not o["traced"])
     m["trace.overhead_ms"] = on - off
     m["trace.overhead_frac"] = (on - off) / off if off else 0.0
     return m

@@ -28,6 +28,7 @@ import graft.sources.{GraphStorage, TxTable}
   *   cpus      local[cpus]
   *   jobs      batch: catalog entries in run order
   *   stream    interactive: the request stream file
+  *   warm      interactive: request blocks run during set-up
   */
 object Main {
 
@@ -54,7 +55,8 @@ object Main {
     val bench = workload match {
       case "batch" => new Batch(args("jobs").split(',').toSeq, data, work, out)
       case "interactive" =>
-        new Interactive(Stream.read(args("stream")), data, work, out, buckets = cpus)
+        new Interactive(Stream.read(args("stream")), args("warm").toInt, data, work, out,
+          buckets = cpus)
       case other => throw new IllegalArgumentException(s"unknown workload $other")
     }
 
@@ -77,8 +79,8 @@ object Main {
     val result = Map[String, Any](
       "workload" -> workload, "setup_s" -> setupS, "prepare_s" -> prepareS,
       "loop_s" -> loopS, "peak_rss_mb" -> Host.peakRssMb(), "cores" -> cpus,
-      "ops" -> ops.map(o => Map("kind" -> o.kind, "name" -> o.name, "ms" -> o.ms,
-        "traced" -> o.traced, "error" -> o.error))) ++ extra ++
+      "ops" -> (bench.warm ++ ops).map(o => Map("kind" -> o.kind, "name" -> o.name,
+        "ms" -> o.ms, "traced" -> o.traced, "error" -> o.error))) ++ extra ++
       (if (traced) TraceDump.fields(tracer, bench.units.toSeq) else Map.empty)
     Files.writeString(out.resolve("result.json"), Json.write(result))
   }
@@ -123,6 +125,8 @@ object Host {
 /** What both workload kinds provide to Main. */
 trait Workload {
   val units = mutable.ArrayBuffer[Main.UnitRec]()
+  /** operations of the set-up whose outputs are checked; not timed */
+  val warm = mutable.ArrayBuffer[Main.Op]()
   /** The workload's set-up, once, before the timed loop. */
   def prepare(spark: SparkSession, tracer: Tracer): Unit
   def loop(spark: SparkSession, tracer: Tracer, seconds: Double,
@@ -221,12 +225,11 @@ final class Batch(jobs: Seq[String], data: String, work: String, out: Path)
 
 /** The interactive request stream, as written by gen.py. */
 final case class Request(kind: String, arg: String, block: Int)
-final case class Stream(warm: Seq[Request], requests: Seq[Request],
-                        orders: Map[Int, Seq[Row]], lines: Map[Int, Seq[Row]])
+final case class Stream(requests: Seq[Request], orders: Map[Int, Seq[Row]],
+                        lines: Map[Int, Seq[Row]])
 
 object Stream {
   def read(path: String): Stream = {
-    val warm = mutable.ArrayBuffer[Request]()
     val reqs = mutable.ArrayBuffer[Request]()
     val orders = mutable.Map[Int, mutable.ArrayBuffer[Row]]()
     val lines = mutable.Map[Int, mutable.ArrayBuffer[Row]]()
@@ -234,7 +237,6 @@ object Stream {
     Files.readAllLines(Paths.get(path)).asScala.foreach { l =>
       val f = l.split("\t", -1)
       f(0) match {
-        case "X" => warm += Request(f(1), f(2), -1)
         case "B" => block = f(1).toInt
         case "R" => reqs += Request(f(1), f(2), block)
         case "P" => reqs += Request("order_point", f(1), block)
@@ -247,7 +249,7 @@ object Stream {
             f(7).toDouble)
       }
     }
-    Stream(warm.toSeq, reqs.toSeq, orders.map(kv => kv._1 -> kv._2.toSeq).toMap,
+    Stream(reqs.toSeq, orders.map(kv => kv._1 -> kv._2.toSeq).toMap,
       lines.map(kv => kv._1 -> kv._2.toSeq).toMap)
   }
 
@@ -262,15 +264,15 @@ object Stream {
 }
 
 object Interactive {
-  /** `seconds` buys one block per this many seconds: six blocks at 15 s */
-  val BlockSeconds = 2.5
+  /** `seconds` buys one timed block per this many seconds: eight at 24 s */
+  val BlockSeconds = 3.0
 }
 
 /** `interactive`: a closed loop of Gremlin reads, TxTable point reads and
   * write batches against a graph stored during set-up.
   */
-final class Interactive(stream: Stream, data: String, work: String, out: Path,
-                        buckets: Int) extends Workload {
+final class Interactive(stream: Stream, warmBlocks: Int, data: String, work: String,
+                        out: Path, buckets: Int) extends Workload {
   private val prefix = "bench_graph"
   private val txRoot = s"$work/tx/orders"
   private val results = new StringBuilder
@@ -279,9 +281,10 @@ final class Interactive(stream: Stream, data: String, work: String, out: Path,
   private var userBytes = 0L
   private var saveGraphS = 0.0
 
-  /** Store the graph, create the transactional table, and make one read
-    * of each kind, so the timed reads find their generated code
-    * compiled. The warm-up reads are not checked.
+  /** Store the graph, create the transactional table, and run the first
+    * `warmBlocks` blocks of the stream, untraced, so that the timed
+    * blocks find the JVM's compiled code warm. The warm blocks' reads
+    * are checked like the timed ones.
     */
   def prepare(spark: SparkSession, tracer: Tracer): Unit = {
     val t0 = System.nanoTime()
@@ -289,8 +292,9 @@ final class Interactive(stream: Stream, data: String, work: String, out: Path,
     GraphStorage.saveGraph(spark, PropertyGraph.fromTpch(spark, data), prefix, buckets)
     saveGraphS = (System.nanoTime() - t0) / 1e9
     TxTable.init(spark, txRoot, spark.read.parquet(s"$data/orders.parquet"))
-    stream.warm.foreach(read(spark, tracer, _))
-    results.clear()
+    stream.requests.takeWhile(_.block < warmBlocks).foreach { r =>
+      warm += request(spark, tracer, r).copy(kind = "warm")
+    }
   }
 
   def loop(spark: SparkSession, tracer: Tracer, seconds: Double,
@@ -301,21 +305,26 @@ final class Interactive(stream: Stream, data: String, work: String, out: Path,
     val ops = mutable.ArrayBuffer[Main.Op]()
     val kinds = stream.requests.map(_.kind).distinct.sorted
     val seen = mutable.Map[String, Int]().withDefaultValue(0)
-    stream.requests.takeWhile(_.block < blocks).foreach { r =>
-      // traced runs trace every other request of each kind, so each
-      // kind has traced and untraced samples to take the overhead from
-      val n = seen(r.kind)
-      seen(r.kind) = n + 1
-      if (traced && (n + kinds.indexOf(r.kind)) % 2 == 0) tracer.enable()
-      else tracer.disable()
-      ops ++= guarded(if (r.kind == "write") "write" else "read", r.kind,
-        tracer.enabled) {
-        Seq(if (r.kind == "write") write(spark, tracer, r) else read(spark, tracer, r))
+    stream.requests.dropWhile(_.block < warmBlocks)
+      .takeWhile(_.block < warmBlocks + blocks).foreach { r =>
+        // traced runs trace every other request of each kind, so each
+        // kind has traced and untraced samples to take the overhead from
+        val n = seen(r.kind)
+        seen(r.kind) = n + 1
+        if (traced && (n + kinds.indexOf(r.kind)) % 2 == 0) tracer.enable()
+        else tracer.disable()
+        ops += request(spark, tracer, r)
       }
-      if (ops.last.error && r.kind != "write") results ++= s"${r.kind}\t$applied\tERROR\n"
-    }
     tracer.disable()
     ops.toSeq
+  }
+
+  private def request(spark: SparkSession, tracer: Tracer, r: Request): Main.Op = {
+    val op = guarded(if (r.kind == "write") "write" else "read", r.kind, tracer.enabled) {
+      Seq(if (r.kind == "write") write(spark, tracer, r) else read(spark, tracer, r))
+    }.head
+    if (op.error && r.kind != "write") results ++= s"${r.kind}\t$applied\tERROR\n"
+    op
   }
 
   private def read(spark: SparkSession, tracer: Tracer, r: Request): Main.Op = {
